@@ -22,6 +22,12 @@ object OrangeCsv {
     val raw = spark.read
       .option("header", "false").option("sep", sep)
       .csv(path)
+    // the header walk below takes the first 3 rows of scan partition 0;
+    // with several files, splits are packed largest-first and partition 0
+    // need not start with the header
+    val files = raw.inputFiles
+    require(files.length == 1,
+      s"$path: expected exactly one file (3 header rows + data), found ${files.length}")
     val cols = raw.columns
     val head = raw.limit(3).collect()
     require(head.length == 3, s"$path: expected 3 header rows")
@@ -87,14 +93,25 @@ object OrangeCsv {
     * counterpart of [[read]] (`Timeseries.save`, Orange `io` path): row 1
     * column names, row 2 type flags (from `orangeType` metadata, else
     * inferred from the Spark type), row 3 role flags. Data rows follow in
-    * series order.
+    * `(seriesKeys, time, tieBreak)` order, so each series is contiguous.
     *
     * This is an interchange EXPORT (a file the Orange GUI opens), so the
-    * output is one CSV part file: header rows and body carry an explicit
-    * sort key and collapse to a single partition before the write — still
-    * a Spark job (no driver collect), just intentionally not parallel.
+    * output is ONE file, `path/part-00000.csv`. The rows are range-
+    * partitioned on the typed order keys and sorted within each range on
+    * all cores; values are formatted after the sort. Spark's CSV writer
+    * writes the header rows and one part per range into a hidden staging
+    * directory beside `path`, and the driver then streams header + parts,
+    * in range order, into the single file through a fixed 64 KB buffer.
+    * `path` is replaced only after every job has succeeded, so a failed
+    * export leaves the previous one in place, and a frame read from
+    * `path` can be written back over it.
+    *
+    * The range partitioning samples the frame in a job of its own, so the
+    * export computes `tsf.df` twice: cache an expensive frame first.
     * Round-trips through [[read]]: same values, roles, and time column. */
   def write(tsf: TimeseriesFrame, path: String, sep: String = ","): Unit = {
+    import org.apache.hadoop.fs.Path
+    import org.apache.hadoop.io.IOUtils
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val spark = tsf.df.sparkSession
@@ -118,6 +135,9 @@ object OrangeCsv {
         case _ => ""
       }
     }
+    val keys = (tsf.seriesKeys ++ tsf.timeCol ++ tsf.tieBreak).distinct
+    require(keys.nonEmpty,
+      s"$path: the export order needs a time column, tie-break or series key")
     val strCols = dataCols.zip(types).map { case (c, t) =>
       val cc = col(c)
       (t match {
@@ -127,19 +147,33 @@ object OrangeCsv {
       }).as(c)
     }
     val body = df
-      .withColumn("__k", row_number().over(tsf.window).cast("long") + 2L)
-      .select(col("__k") +: strCols: _*)
-    val hSchema = StructType(StructField("__k", LongType) +:
-      dataCols.map(c => StructField(c, StringType)))
+      .repartitionByRange(keys.map(col): _*)
+      .sortWithinPartitions(keys.map(col): _*)
+      .select(strCols: _*)
     val header = spark.createDataFrame(
-      java.util.Arrays.asList(
-        Row.fromSeq(0L +: dataCols),
-        Row.fromSeq(1L +: types),
-        Row.fromSeq(2L +: roles)),
-      hSchema)
-    header.union(body)
-      .coalesce(1).sortWithinPartitions("__k").drop("__k")
-      .write.mode("overwrite").option("sep", sep).option("header", "false")
-      .csv(path)
+      java.util.Arrays.asList(Row.fromSeq(dataCols), Row.fromSeq(types), Row.fromSeq(roles)),
+      StructType(dataCols.map(StructField(_, StringType))))
+
+    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val out = fs.makeQualified(new Path(path))
+    val staging = new Path(out.getParent, s".${out.getName}-staging-${java.util.UUID.randomUUID}")
+    try {
+      val parts = Seq("header" -> header, "body" -> body).flatMap { case (name, part) =>
+        val dir = new Path(staging, name)
+        // one part-NNNNN-<job uuid>-c000.csv per range whatever the
+        // session's maxRecordsPerFile, so name order is range order
+        part.write.option("sep", sep).option("maxRecordsPerFile", 0L).csv(dir.toString)
+        fs.listStatus(dir).map(_.getPath).filter(_.getName.startsWith("part-"))
+          .sortBy(_.getName)
+      }
+      val joined = new Path(staging, "out")
+      val os = fs.create(new Path(joined, "part-00000.csv"))
+      try parts.foreach { p =>
+        val in = fs.open(p)
+        try IOUtils.copyBytes(in, os, 1 << 16, false) finally in.close()
+      } finally os.close()
+      fs.delete(out, true)
+      if (!fs.rename(joined, out)) throw new java.io.IOException(s"cannot move $joined to $out")
+    } finally fs.delete(staging, true)
   }
 }

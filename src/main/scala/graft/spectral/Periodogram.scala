@@ -628,30 +628,32 @@ object Periodogram {
       val power = (xcTau * xcTau / ccTau + xsTau * xsTau / ssTau) / 2.0
       Tuple2(2.0 * math.Pi / omegas(j), power * (2.0 / (n * variance)))
     }
-    // r16: scale + 5-neighborhood peak-pick on the driver. The spectrum
-    // is a FIXED nPeriods-row frame that was already driver-resident
-    // (the fold's collect above), yet [[scaleAndPeaks]] re-shipped it
-    // through a LocalTableScan + SinglePartition exchange + two window
-    // passes — ~3 driver jobs per action at ~30 ms each, the dominant
-    // q30 cost class at gate scale. This loop evaluates the IDENTICAL
-    // expressions on the identical doubles: same (p−min)/(max−min)
-    // scaling per row, same strict > against the ≤5 lag/lead neighbors
-    // with out-of-range neighbors admitted (the window twin's isNull
-    // disjunct), same ascending-period order (stable sort ≡ the window
-    // sort's tie behavior). Degenerate all-NaN pgram (max == min) yields
-    // no peaks on both paths. Bounded driver work: nPeriods rows always.
-    var mn = Double.PositiveInfinity; var mx = Double.NegativeInfinity
-    specRows.foreach { case (_, p) => if (p < mn) mn = p; if (p > mx) mx = p }
-    val asc = specRows.sortBy(_._1)
-    val g = asc.map { case (_, p) => (p - mn) / (mx - mn) }.toArray
-    val nR = g.length
-    val picked = (0 until nR).filter { i =>
-      (1 to 5).forall { k =>
-        (i - k < 0 || g(i) > g(i - k)) && (i + k >= nR || g(i) > g(i + k))
-      } && i - 1 >= 0 && i + 1 < nR
-    }
-    spark.createDataFrame(picked.map(i => Tuple2(asc(i)._1, g(i))))
-      .toDF("period", "pgram")
+    spark.createDataFrame(lombPeaks(specRows)).toDF("period", "pgram")
   }
+
+  /** Scale + 5-neighborhood peak-pick of a driver-resident Lomb–Scargle
+    * spectrum, `(period, power)` rows in any order. Same expressions as
+    * [[scaleAndPeaks]] (same (p−min)/(max−min) scaling, strict > against
+    * the ≤5 lag/lead neighbors with out-of-range neighbors admitted,
+    * ascending-period order), evaluated on the driver because the
+    * nPeriods-row spectrum is already there: shipping it back through a
+    * window costs ~3 jobs per action. Any NaN power yields no peaks, as in
+    * the window path (SQL max is NaN, so every scaled value is NaN) and
+    * the reference; so does a flat spectrum (max == min). */
+  private[spectral] def lombPeaks(
+      spec: IndexedSeq[(Double, Double)]): IndexedSeq[(Double, Double)] =
+    if (spec.isEmpty || spec.exists(_._2.isNaN)) IndexedSeq.empty
+    else {
+      val mn = spec.map(_._2).min
+      val mx = spec.map(_._2).max
+      val asc = spec.sortBy(_._1)
+      val g = asc.map { case (_, p) => (p - mn) / (mx - mn) }.toArray
+      val nR = g.length
+      (1 until nR - 1).filter { i =>
+        (1 to 5).forall { k =>
+          (i - k < 0 || g(i) > g(i - k)) && (i + k >= nR || g(i) > g(i + k))
+        }
+      }.map(i => (asc(i)._1, g(i)))
+    }
 
 }

@@ -129,6 +129,17 @@ class SpectralSpec extends SparkSpec {
     assert(math.abs(p.map(_.getDouble(1)).max - 1.0) < 1e-9)
   }
 
+  test("Lomb-Scargle peak pick: any NaN power yields no peaks") {
+    // planted 30-row spectrum with two clear local maxima
+    val spec = (0 until 30).map { i =>
+      (100.0 - i, if (i == 10) 5.0 else if (i == 20) 4.0 else (i % 3).toDouble)
+    }
+    assert(Periodogram.lombPeaks(spec).map(_._1).sorted == Seq(80.0, 90.0))
+    // one degenerate ω far from both peaks turns the whole pick off
+    assert(Periodogram.lombPeaks(spec.updated(27, (73.0, Double.NaN))).isEmpty)
+    assert(Periodogram.lombPeaks(spec.map { case (p, _) => (p, 1.0) }).isEmpty)
+  }
+
   test("quadratic/cubic detrend matches numpy polyfit residuals on airpassengers") {
     // transcribed goldens: np.polyfit(arange(144), x, order) residuals
     val gold = Map(
